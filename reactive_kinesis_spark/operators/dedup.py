@@ -29,8 +29,6 @@ def _persist(df: DataFrame, cache_registry: list | None) -> DataFrame:
     on ``spark.catalog.clearCache()`` (the bench-harness approach). The
     cache entry is keyed by canonicalized plan, so repeated calls on the
     same input reuse one entry rather than leaking new ones."""
-    from pyspark import StorageLevel
-
     out = df.persist(StorageLevel.MEMORY_AND_DISK)
     if cache_registry is not None:
         cache_registry.append(out)

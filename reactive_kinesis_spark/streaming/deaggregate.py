@@ -46,6 +46,15 @@ def pack_records(records: list[tuple[str, bytes]]) -> bytes:
     return b"".join(out)
 
 
+def is_aggregate(blob: bytes) -> bool:
+    """True if ``blob`` carries either aggregate magic (RKSA1 or KPL) —
+    the one deaggregation decision both :func:`deaggregate` and the live
+    source make."""
+    from reactive_kinesis_spark.streaming.kpl import is_kpl_aggregate
+
+    return blob.startswith(MAGIC) or is_kpl_aggregate(blob)
+
+
 class CorruptAggregateError(ValueError):
     """An RKSA1-magic blob whose body doesn't parse — surface clearly so
     callers can route the record to a DLQ (tolerance.py) instead of
@@ -162,14 +171,12 @@ def deaggregate(df: DataFrame) -> DataFrame:
     with their original sub-sequence. Narrow transform — no shuffle."""
     import pandas as pd
 
-    from reactive_kinesis_spark.streaming.kpl import is_kpl_aggregate
-
     def unpack(batches: Iterator) -> Iterator:
         for pdf in batches:
             rows = []
             for r in pdf.itertuples(index=False):
                 blob = bytes(r.payload)
-                if blob.startswith(MAGIC) or is_kpl_aggregate(blob):
+                if is_aggregate(blob):
                     for sub, (pk, data) in enumerate(unpack_records(blob)):
                         rows.append(
                             (r.stream_name, r.shard_id, pk or r.partition_key,

@@ -40,9 +40,8 @@ sequential), ``shards`` (explicit subset
 — the L1 shard-assignment analog), ``leaseDir`` + ``workerId`` +
 ``failoverTimeMillis`` (automatic lease coordination between N concurrent
 consumers — heartbeats, cooperative rebalance, dead-worker takeover from
-the lease checkpoint; a shared directory, or ``sqlite:<file>`` / a
-``*.db`` path for the transactional lease-table backend — see
-:mod:`.lease`), ``deaggregate`` (true = KCL-style KPL
+the lease checkpoint; ``leaseDir`` is the path of the shared-directory
+lease store — see :mod:`.lease`), ``deaggregate`` (true = KCL-style KPL
 deaggregation with sub-sequence numbers), ``transport`` (factory name,
 default ``boto3``) + ``region``/``endpointUrl``/``profile``.
 
@@ -276,12 +275,16 @@ class _LiveStreamReader(SimpleDataSourceStreamReader):
         seq = rec["SequenceNumber"]
         pk = rec.get("PartitionKey", "")
         if self._deaggregate:
-            from reactive_kinesis_spark.streaming.deaggregate import unpack_records
+            from reactive_kinesis_spark.streaming.deaggregate import (
+                is_aggregate,
+                unpack_records,
+            )
 
-            subs = unpack_records(data)
-            if not (len(subs) == 1 and subs[0][0] == ""):
-                for i, (sub_pk, sub_data) in enumerate(subs):
-                    yield (self._stream, shard_id, sub_pk, seq, i, sub_data, ts)
+            if is_aggregate(data):
+                # an empty sub-key falls back to the record's own key, as
+                # in deaggregate()
+                for i, (sub_pk, sub_data) in enumerate(unpack_records(data)):
+                    yield (self._stream, shard_id, sub_pk or pk, seq, i, sub_data, ts)
                 return
         yield (self._stream, shard_id, pk, seq, 0, data, ts)
 

@@ -236,12 +236,16 @@ def _scan_layout(path: str) -> tuple[int, int]:
     import pyarrow.parquet as pq
 
     if os.path.isdir(path):
-        files = [
-            os.path.join(root, f)
-            for root, dirs, names in os.walk(path)
-            for f in names
-            if f.endswith(".parquet") and not f.startswith((".", "_"))
-        ]
+        files = []
+        for root, dirs, names in os.walk(path):
+            # hidden/staging directories (_tmp/, .staging/) are not part of
+            # the table, exactly like hidden files
+            dirs[:] = [d for d in dirs if not d.startswith((".", "_"))]
+            files.extend(
+                os.path.join(root, f)
+                for f in names
+                if f.endswith(".parquet") and not f.startswith((".", "_"))
+            )
     else:
         files = [path]
     total_rgs = 0

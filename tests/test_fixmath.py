@@ -8,6 +8,8 @@ from __future__ import annotations
 
 import math
 
+import pytest
+
 from reactive_kinesis_spark.fixmath import (
     LOG2_SCALE,
     log2_fixed_ctes,
@@ -70,3 +72,17 @@ def test_log2_fixed_intermediates_dropped_and_src_expression(spark):
     lg = out.collect()[0]["lg"]
     assert abs(lg / LOG2_SCALE - math.log2(7)) <= 1.5 / LOG2_SCALE
     assert lg <= int(math.log2(7) * LOG2_SCALE) + 1
+
+
+def test_log2_fixed_refuses_input_columns_in_the_intermediate_namespace(spark):
+    """An input column named like an intermediate (``__lg_e``) would take
+    the intermediate's place in the chain and be dropped from the output;
+    the clash is refused instead of yielding a wrong log."""
+    df = spark.createDataFrame([(8.0, 40)], "x double, __lg_e long")
+    with pytest.raises(ValueError, match="__lg_e"):
+        with_log2_fixed(df, "CAST(x AS BIGINT)", "lg")
+    # a different prefix keeps the column and the right value (log2 8 = 3)
+    out = with_log2_fixed(df, "CAST(x AS BIGINT)", "lg", prefix="ok")
+    row = out.collect()[0]
+    assert out.columns == ["x", "__lg_e", "lg"]
+    assert row["lg"] == 3 * LOG2_SCALE and row["__lg_e"] == 40

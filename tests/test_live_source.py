@@ -384,6 +384,54 @@ def test_deaggregate_expands_kpl_aggregates_with_sub_sequence():
     ]
 
 
+def test_live_and_batch_deaggregate_agree_on_empty_sub_key(spark):
+    """A one-record aggregate whose user key is "" is still an aggregate:
+    the live source and ``deaggregate()`` both unpack it and fall back to
+    the record's own partition key, in either wire format."""
+    from reactive_kinesis_spark.schemas import EVENT_SCHEMA
+    from reactive_kinesis_spark.streaming.deaggregate import deaggregate, pack_records
+    from reactive_kinesis_spark.streaming.kpl import pack_kpl_records
+
+    sid = "shardId-000000000000"
+    blobs = [
+        pack_records([("", b"user")]),
+        pack_kpl_records([("", b"user")]),
+        pack_records([("", b"a"), ("pb", b"b")]),
+        b"raw",
+    ]
+    recs = [
+        {
+            "SequenceNumber": _seq(i),
+            "PartitionKey": f"pk{i}",
+            "Data": blob,
+            "ApproximateArrivalTimestamp": _ts(i),
+        }
+        for i, blob in enumerate(blobs)
+    ]
+    r = _reader(FakeKinesisConsumerClient({sid: recs}), deaggregate="true")
+    live = sorted(
+        (row[2], row[3], row[4], bytes(row[5]))
+        for row in r.read(r.initialOffset())[0]
+    )
+    raw = spark.createDataFrame(
+        [("s", sid, rec["PartitionKey"], rec["SequenceNumber"], 0, rec["Data"],
+          rec["ApproximateArrivalTimestamp"]) for rec in recs],
+        EVENT_SCHEMA,
+    )
+    batch = sorted(
+        (row.partition_key, row.sequence_number, row.sub_sequence_number,
+         bytes(row.payload))
+        for row in deaggregate(raw).collect()
+    )
+    assert live == batch == sorted([
+        ("pk0", _seq(0), 0, b"user"),
+        ("pk1", _seq(1), 0, b"user"),
+        ("pk2", _seq(2), 0, b"a"),
+        ("pb", _seq(2), 1, b"b"),
+        ("pk3", _seq(3), 0, b"raw"),
+    ])
+
+
 def test_shard_subset_pins_assignment():
     client = _client(n_per_shard=5, shards=3)
     r = _reader(client, shards="shardId-000000000002")

@@ -115,3 +115,19 @@ def test_memoized_frame_still_recomputes_from_parquet(spark, sf_dir):
     n1 = df.count()
     n2 = load_table(spark, sf_dir, "lineitem").count()
     assert n1 == n2 > 0
+
+
+def test_scan_layout_skips_hidden_and_staging_directories(tmp_path):
+    """Parquet under ``_tmp/`` or ``.staging/`` is not part of the table
+    and must not inflate the layout the repartition is sized from; a
+    Hive-partitioned subdirectory still counts."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    table = pa.table({"x": list(range(100))})
+    root = tmp_path / "t"
+    for sub in ("", "k=1", "_tmp", ".staging"):
+        (root / sub).mkdir(parents=True, exist_ok=True)
+        pq.write_table(table, str(root / sub / "part.parquet"))
+    one_rgs, one_bytes = tables._scan_layout(str(root / "part.parquet"))
+    assert tables._scan_layout(str(root)) == (2 * one_rgs, 2 * one_bytes)
